@@ -17,11 +17,6 @@ FIXED_PRECISION_FACTOR = 10_000_000.0  # reference Node.java:10
 EARTH_RADIUS_M = 6_371_000.0
 
 
-def to_fixed(deg: Column) -> Column:
-    """deg → int32 fixed-point, truncating toward zero (Node.java:26-29)."""
-    return (deg * F.lit(FIXED_PRECISION_FACTOR)).cast("int")
-
-
 def from_fixed(fixed: Column) -> Column:
     """int32 fixed-point → degrees (Node.java:22-24)."""
     return fixed.cast("double") / F.lit(FIXED_PRECISION_FACTOR)

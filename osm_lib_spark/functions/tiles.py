@@ -7,12 +7,11 @@ Reference semantics (WebMercatorTile.java:9,16-18): fixed ZOOM=12,
 Two implementations are provided:
 
 * ``tile_x_col`` / ``tile_y_col`` — pure Column expressions (JVM-side,
-  whole-stage codegen). Fastest path; double semantics are Java's
-  because it IS the JVM.
-* ``tile_xy_udf`` — a vectorized Arrow/pandas UDF (numpy float64) used
-  where the engine computes cell keys inside a batch pipeline (the
-  north-star "cell encodes in pandas batches"), and by the pure-pandas
-  test oracle so engine and oracle share bit-exact float behavior.
+  whole-stage codegen), used by every Spark operator; double semantics
+  are Java's because it IS the JVM.
+* ``np_tile_x`` / ``np_tile_y`` — numpy float64 twins, used by the
+  pure-pandas oracle (``sources/oracle.py``) and to turn a query bbox
+  into its tile range on the driver (``bbox_tile_range``).
 
 ``hilbert_key`` linearizes (xtile, ytile) on a Hilbert curve so that
 ``repartitionByRange`` over the key gives spatially-contiguous
@@ -23,10 +22,8 @@ reference's sorted (x, y, wayId) B-tree index, OSM.java:144-146).
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 ZOOM = 12  # reference WebMercatorTile.java:9
 NTILES = 1 << ZOOM
@@ -107,28 +104,6 @@ def tile_y_col(lat: Column, zoom: int = ZOOM) -> Column:
         - F.log(F.tan(lat_r) + F.lit(1.0) / F.cos(lat_r)) / F.lit(float(np.pi))
     ) / F.lit(2.0)
     return F.floor(y * F.lit(float(1 << zoom))).cast("int")
-
-
-# ---------------------------------------------------------------------------
-# Vectorized Arrow UDFs
-# ---------------------------------------------------------------------------
-
-_TILE_SCHEMA = T.StructType(
-    [T.StructField("xtile", T.IntegerType()), T.StructField("ytile", T.IntegerType())]
-)
-
-
-@F.pandas_udf(_TILE_SCHEMA)
-def tile_xy_udf(lat: pd.Series, lon: pd.Series) -> pd.DataFrame:
-    """(lat, lon) → (xtile, ytile) at z12, numpy-vectorized per Arrow batch."""
-    return pd.DataFrame(
-        {"xtile": np_tile_x(lon.to_numpy()), "ytile": np_tile_y(lat.to_numpy())}
-    )
-
-
-@F.pandas_udf(T.LongType())
-def hilbert_key_udf(xtile: pd.Series, ytile: pd.Series) -> pd.Series:
-    return pd.Series(np_hilbert_d(xtile.to_numpy(), ytile.to_numpy()))
 
 
 def hilbert_key_col(xtile: Column, ytile: Column, order: int = ZOOM) -> Column:

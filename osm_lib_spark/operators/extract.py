@@ -1,15 +1,18 @@
 """Bounding-box tile extract — the flagship query.
 
 Re-expresses the reference's `GET /minLat,minLon,maxLat,maxLon.pbf`
-pipeline (TileOSMSource.java:49-143) as one declarative DataFrame DAG:
+pipeline (TileOSMSource.java:49-143) as ONE declarative DataFrame DAG
+that extracts a whole batch of bboxes at once, the batch analog of the
+concurrent extract server (VanillaExtract.java:102-148). A single
+extract is a batch of one:
 
-    bbox → z12 tile range (y-inverted, TileOSMSource.java:43-45)
-         → way_tiles range filter            (S5: partition-pruned scan)
-         → ways semi-join                    (J2)
-         → explode refs → nodes inner join   (J1 + J6 dedup)
-         → relation semi-joins by node/way   (J3/J4, INTENDED semantics)
-         → upward relation closure           (J5, semi-naive iteration)
-         → type-major ordered output         (O1)
+    bboxes → z12 tile ranges (y-inverted, TileOSMSource.java:43-45)
+           → way_tiles envelope filter       (S5: pushed into the scan)
+           → range join with the bbox table  (J2, keyed by bbox_id)
+           → explode refs → nodes semi-join  (J1 + J6 dedup)
+           → relation joins by node/way      (J3/J4, INTENDED semantics)
+           → upward relation closure         (J5, precomputed table)
+           → (bbox_id, entity_type, id) union
 
 Documented deviations from the reference (SURVEY §5.4 — reference bugs,
 we implement the intended semantics): the node→relation lookup keys on
@@ -17,13 +20,11 @@ nodeId (the reference accidentally uses wayId, TileOSMSource.java:87-89),
 relations are emitted once (not once per pass), and the closure frontier
 tests the discovered id (TileOSMSource.java:127).
 
-Scale design: the tile filter reaches the way_tiles parquet scan
-(min/max row-group skipping via the Hilbert-sorted layout); the J1 join
-deduplicates probe keys first so both join sides are key-unique (no
-skew); AQE picks broadcast at runtime when the bbox is small and its
-way-id set is tiny; the closure loop is semi-naive (joins only the
-frontier, not the whole seen set) and localCheckpoints each round to
-keep the plan from growing.
+Scale design: the envelope of the batch's tile ranges reaches the
+way_tiles parquet scan (min/max row-group skipping via the
+Hilbert-sorted layout); ref dedup and the node semi-join share one
+exchange on ref_id; the relation closure is computed once per dataset
+(``prepare_extract_context``), so each extract resolves it in one join.
 """
 
 from __future__ import annotations
@@ -36,8 +37,6 @@ from pyspark.sql import functions as F
 from osm_lib_spark.functions.tiles import bbox_tile_range
 from osm_lib_spark.operators.indexes import build_way_tiles
 
-MAX_CLOSURE_ITERATIONS = 50
-
 
 def relation_closure_table(relations: DataFrame) -> DataFrame:
     """Transitive UPWARD closure of the relation-membership graph:
@@ -48,7 +47,7 @@ def relation_closure_table(relations: DataFrame) -> DataFrame:
     relation→relation edge set (the relationsByRelation index,
     OSM.java:156-158); every bbox extract then resolves its closure
     with a single equi-join instead of an iterative per-query loop.
-    Cycle-safe: the union is distinct, growth is monotone and bounded.
+    Runs to its fixpoint, however deep the relation chains are.
     """
     edges = (
         relations.select(F.col("id").alias("relation_id"), F.explode("members").alias("m"))
@@ -61,7 +60,10 @@ def relation_closure_table(relations: DataFrame) -> DataFrame:
 
     closure = edges
     frontier = edges
-    for _ in range(MAX_CLOSURE_ITERATIONS):
+    # Terminates (cycles included): ``new`` is anti-joined against
+    # ``closure``, so every round that continues adds at least one pair,
+    # and there are at most N² pairs over the N relation ids in ``edges``.
+    while True:
         # extend frontier paths by one parent hop
         step = (
             frontier.alias("f")
@@ -110,45 +112,66 @@ def prepare_extract_context(relations: DataFrame) -> ExtractContext:
 
 @dataclass
 class Extract:
-    nodes: DataFrame
-    ways: DataFrame
-    relations: DataFrame
+    """One bbox's extract: its (entity_type, id) frame, plus the entity
+    tables it was computed over so the selected rows can be fetched."""
+
+    entities: DataFrame
+    node_table: DataFrame
+    way_table: DataFrame
+    relation_table: DataFrame
+
+    def _rows(self, table: DataFrame, entity_type: str) -> DataFrame:
+        ids = self.entities.where(F.col("entity_type") == entity_type).select("id")
+        return table.join(ids, "id", "left_semi")
+
+    @property
+    def nodes(self) -> DataFrame:
+        return self._rows(self.node_table, "node")
+
+    @property
+    def ways(self) -> DataFrame:
+        return self._rows(self.way_table, "way")
+
+    @property
+    def relations(self) -> DataFrame:
+        return self._rows(self.relation_table, "relation")
 
     def ids(self, ordered: bool = True) -> DataFrame:
-        """(entity_type, id) union in type-major order (O1,
+        """(entity_type, id) in type-major order (O1,
         OSMEntitySource.java:10-13): nodes, then ways, then relations.
         ``ordered=False`` skips the global sort — use when the consumer
         only aggregates (a Sort below an Aggregate is pure waste)."""
-        u = (
-            self.nodes.select(F.lit("node").alias("entity_type"), "id")
-            .unionByName(self.ways.select(F.lit("way").alias("entity_type"), "id"))
-            .unionByName(
-                self.relations.select(F.lit("relation").alias("entity_type"), "id")
-            )
-        )
         if not ordered:
-            return u
+            return self.entities
         type_rank = (
             F.when(F.col("entity_type") == "node", 0)
             .when(F.col("entity_type") == "way", 1)
             .otherwise(2)
         )
-        return u.orderBy(type_rank, "id")
+        return self.entities.orderBy(type_rank, "id")
 
 
-def ways_in_bbox(
-    way_tiles: DataFrame, bbox: tuple[float, float, float, float]
+def _tiles_in_range(
+    way_tiles: DataFrame, tile_range: tuple[int, int, int, int]
 ) -> DataFrame:
-    """Tile-range scan (S5, TileOSMSource.java:59-68) → way_id frame.
+    """Tile-range scan (S5, TileOSMSource.java:59-68): the way_tiles rows
+    inside the inclusive (min_x, min_y, max_x, max_y) range.
 
     The between-predicates are plain column filters, so they push down
     into the parquet/Iceberg scan and prune row groups when way_tiles is
     stored Hilbert-sorted (write_way_tiles_partitioned).
     """
-    min_x, min_y, max_x, max_y = bbox_tile_range(*bbox)
+    min_x, min_y, max_x, max_y = tile_range
     return way_tiles.where(
         F.col("xtile").between(min_x, max_x) & F.col("ytile").between(min_y, max_y)
-    ).select("way_id")
+    )
+
+
+def ways_in_bbox(
+    way_tiles: DataFrame, bbox: tuple[float, float, float, float]
+) -> DataFrame:
+    """→ way_id frame of the way_tiles rows inside ``bbox``'s tile range."""
+    return _tiles_in_range(way_tiles, bbox_tile_range(*bbox)).select("way_id")
 
 
 def bbox_extract_batch(
@@ -175,10 +198,17 @@ def bbox_extract_batch(
     if ctx is None:
         ctx = prepare_extract_context(relations)
 
-    ranges = [(i,) + bbox_tile_range(*b) for i, b in enumerate(bboxes)]
+    ranges = [bbox_tile_range(*b) for b in bboxes]
     bbox_df = spark.createDataFrame(
-        ranges, "bbox_id int, min_x int, min_y int, max_x int, max_y int"
+        [(i,) + r for i, r in enumerate(ranges)],
+        "bbox_id int, min_x int, min_y int, max_x int, max_y int",
     )
+    # The envelope of the tile ranges holds every non-empty range, so
+    # this filter drops no hit; it is what reaches a stored way_tiles
+    # scan. (Taken over tile ranges, not lat/lon: bbox_tile_range is not
+    # monotone at the poles.)
+    min_xs, min_ys, max_xs, max_ys = zip(*ranges)
+    envelope = (min(min_xs), min(min_ys), max(max_xs), max(max_ys))
     # lazy checkpoint: b_ways feeds THREE consumers (the ref explode,
     # the way→relation join, the way output branch); Spark plans union
     # branches as separate subtrees (no ReuseExchange matched here), so
@@ -186,7 +216,7 @@ def bbox_extract_batch(
     # re-executes once per consumer (plan audit r06: the BNLJ subtree
     # appeared 3× in the physical plan).
     hits = (
-        way_tiles.join(
+        _tiles_in_range(way_tiles, envelope).join(
             F.broadcast(bbox_df),
             F.col("xtile").between(F.col("min_x"), F.col("max_x"))
             & F.col("ytile").between(F.col("min_y"), F.col("max_y")),
@@ -255,74 +285,15 @@ def bbox_extract(
     way_tiles: DataFrame | None = None,
     ctx: ExtractContext | None = None,
 ) -> Extract:
-    """Full extract. ``bbox`` = (min_lat, min_lon, max_lat, max_lon).
+    """Full extract of one ``bbox`` = (min_lat, min_lon, max_lat, max_lon):
+    ``bbox_extract_batch`` over a batch of one.
 
     ``way_tiles`` may be a pre-built (ideally Hilbert-partitioned) index
     table; if None it is derived on the fly. ``ctx`` (from
-    ``prepare_extract_context``) is reused across a batch of extracts —
-    the relation closure then costs ONE join per extract instead of an
-    iterative loop.
+    ``prepare_extract_context``) is reused across extracts so the
+    relation closure is computed once.
     """
-    if way_tiles is None:
-        way_tiles = build_way_tiles(ways, nodes)
-    if ctx is None:
-        ctx = prepare_extract_context(relations)
-    hit_ways = ways_in_bbox(way_tiles, bbox)
-
-    # J2: fetch way rows. left_semi keeps the probe side lean.
-    # Lazy checkpoint: the way subtree feeds THREE consumers (ref
-    # explode, rel-by-way semi, the output union) and the node subtree
-    # TWO (rel-by-node semi, output) — Spark plans union branches as
-    # separate subtrees, so without the barriers the tile scan + semi
-    # joins re-execute per branch (measured ~2× single-extract latency).
-    extract_ways = ways.join(
-        hit_ways, ways.id == hit_ways.way_id, "left_semi"
-    ).localCheckpoint(eager=False)
-
-    # J1 + J6: resolve refs → nodes, dedup before the join so both sides
-    # are key-unique (orphan refs drop out via the inner join, the
-    # logged-and-skipped semantics of TileOSMSource.java:80-82).
-    ref_ids = extract_ways.select(F.explode("node_ids").alias("ref_id")).distinct()
-    extract_nodes = nodes.join(
-        ref_ids, nodes.id == ref_ids.ref_id, "left_semi"
-    ).localCheckpoint(eager=False)
-
-    # J3/J4: relations referencing extracted nodes (by nodeId — intended
-    # semantics) or extracted ways.
-    rel_by_node = ctx.rel_by_node.join(
-        extract_nodes.select(F.col("id").alias("nid")),
-        F.col("member_id") == F.col("nid"),
-        "left_semi",
-    )
-    rel_by_way = ctx.rel_by_way.join(
-        extract_ways.select(F.col("id").alias("wid")),
-        F.col("member_id") == F.col("wid"),
-        "left_semi",
-    )
-    # lazy checkpoint: seen feeds the closure semi-join AND the output
-    # union (it was planned twice — plan audit r06); it is bounded by
-    # the relation count, so the closure and final semi-joins broadcast
-    # it instead of sort-merging stats-free RDD scans.
-    seen = (
-        rel_by_node.select("relation_id")
-        .unionByName(rel_by_way.select("relation_id"))
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
-
-    # J5: upward closure resolved in ONE join against the precomputed
-    # transitive closure table (TileOSMSource.java:112-132 semantics).
-    ancestors = (
-        ctx.rel_closure.join(
-            F.broadcast(seen.withColumnRenamed("relation_id", "seen_id")),
-            ctx.rel_closure.relation_id == F.col("seen_id"),
-            "left_semi",
-        )
-        .select(F.col("ancestor_id").alias("relation_id"))
-    )
-    all_rels = seen.unionByName(ancestors).distinct()
-
-    extract_rels = relations.join(
-        F.broadcast(all_rels), relations.id == all_rels.relation_id, "left_semi"
-    )
-    return Extract(nodes=extract_nodes, ways=extract_ways, relations=extract_rels)
+    entities = bbox_extract_batch(
+        nodes, ways, relations, [bbox], way_tiles=way_tiles, ctx=ctx
+    ).drop("bbox_id")
+    return Extract(entities, nodes, ways, relations)

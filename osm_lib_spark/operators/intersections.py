@@ -30,9 +30,3 @@ def intersections(ways: DataFrame) -> DataFrame:
         .where(F.col("ref_count") >= 2)
         .select("node_id")
     )
-
-
-def referenced_nodes(ways: DataFrame) -> DataFrame:
-    """All node IDs referenced by any way (the referencedNodes bitset,
-    OSM.java:46-47) — distinct explode."""
-    return ways.select(F.explode("node_ids").alias("node_id")).distinct()

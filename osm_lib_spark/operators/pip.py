@@ -362,48 +362,3 @@ def grid_polygons(
         polys[i + 1] = [np.asarray(r, dtype=np.float64) for r in rings]
     return polys
 
-
-def polygon_rings_from_relation(
-    relations: DataFrame, ways: DataFrame, nodes: DataFrame, relation_id: int
-) -> dict[int, list[np.ndarray]]:
-    """Resolve a type=multipolygon relation's member ways into rings.
-
-    Way→node resolution with order restored via posexplode + sort
-    (the J1 join, TileOSMSource.java:77-84): member ways' node_ids are
-    looked up and each way's coordinate sequence becomes one ring.
-    Returns {relation_id: [outer_ring, inner_ring, ...]} with rings in
-    member order (role=outer first by convention of the fixture).
-    """
-    members = (
-        relations.where(F.col("id") == relation_id)
-        .select(F.posexplode("members").alias("m_pos", "m"))
-        .where(F.col("m.type") == "WAY")
-        .select("m_pos", F.col("m.member_id").alias("way_id"), F.col("m.role").alias("role"))
-    )
-    way_pts = (
-        members.join(ways, members.way_id == ways.id, "inner")
-        .select("m_pos", "way_id", F.posexplode("node_ids").alias("n_pos", "ref_id"))
-        .join(
-            nodes.select(
-                F.col("id").alias("nid"),
-                from_fixed(F.col("fixed_lat")).alias("lat"),
-                from_fixed(F.col("fixed_lon")).alias("lon"),
-            ),
-            F.col("ref_id") == F.col("nid"),
-            "inner",
-        )
-        .groupBy("m_pos", "way_id")
-        .agg(
-            F.sort_array(
-                F.collect_list(F.struct("n_pos", "lat", "lon"))
-            ).alias("pts")
-        )
-        .orderBy("m_pos")
-        .collect()
-    )
-    rings = [
-        np.array([[p.lat, p.lon] for p in row.pts], dtype=np.float64)
-        for row in way_pts
-        if len(row.pts) >= 3
-    ]
-    return {relation_id: rings}

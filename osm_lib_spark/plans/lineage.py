@@ -183,7 +183,3 @@ def run_stage(
     # drop the synthetic bucket so checkpointed and non-checkpointed
     # runs emit the same schema (drop is a no-op for user bucket cols)
     return written.drop("_bucket")
-
-
-def new_job_id() -> str:
-    return uuid.uuid4().hex[:12]

@@ -1055,8 +1055,11 @@ def _encode_rel_block_arrow(chunk: "pa.RecordBatch") -> bytes:
     nonempty = m_counts > 0
     deltas[m_starts[nonempty]] = mids[m_starts[nonempty]]
     tcodes = np.select(
-        [mtypes == "NODE", mtypes == "WAY"], [0, 1], default=2
-    ).astype(np.uint64)
+        [mtypes == "NODE", mtypes == "WAY", mtypes == "RELATION"], [0, 1, 2], default=-1
+    )
+    if (tcodes < 0).any():
+        raise ValueError(f"unknown relation member type {mtypes[tcodes < 0][0]!r}")
+    tcodes = tcodes.astype(np.uint64)
 
     k_buf, k_lo, k_hi = _seg_varint_spans(kcodes, tag_counts)
     v_buf, v_lo, v_hi = _seg_varint_spans(vcodes, tag_counts)
@@ -1197,26 +1200,6 @@ def write_pbf(path: str, nodes, ways, relations, block_size: int = BLOCK_SIZE):
     from pyspark.sql import functions as F  # noqa: N812
 
     blob_schema = "type_rank int, first_id long, blob binary"
-
-    def encoder(kind: str):
-        def enc(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            rank = {"node": 0, "way": 1, "relation": 2}[kind]
-            for pdf in batches:
-                if len(pdf) == 0:
-                    continue
-                pdf = pdf.sort_values("id").reset_index(drop=True)
-                for lo in range(0, len(pdf), block_size):
-                    chunk = pdf.iloc[lo : lo + block_size]
-                    blob = _blob_bytes("OSMData", _encode_block(kind, chunk))
-                    yield pd.DataFrame(
-                        {
-                            "type_rank": [rank],
-                            "first_id": [int(chunk["id"].iloc[0])],
-                            "blob": [blob],
-                        }
-                    )
-
-        return enc
 
     blob_pa_schema = pa.schema(
         [("type_rank", pa.int32()), ("first_id", pa.int64()), ("blob", pa.binary())]

@@ -10,11 +10,12 @@ from jobs.convert import main as convert_main
 
 BANGOR = "/root/reference/src/test/resources/bangor_maine.osm.pbf"
 
-pytestmark = pytest.mark.skipif(
+needs_bangor = pytest.mark.skipif(
     not os.path.exists(BANGOR), reason="reference fixture not present"
 )
 
 
+@needs_bangor
 def test_convert_pbf_to_vex_with_speeds_and_txt(spark, tmp_path, capsys):
     from pyspark.sql import functions as F
 

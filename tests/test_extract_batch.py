@@ -12,6 +12,7 @@ from osm_lib_spark.operators.extract import (
     prepare_extract_context,
 )
 from osm_lib_spark.sources.span_codec import parse_nodes, parse_relations, parse_ways
+from tests.conftest import golden
 
 
 @pytest.fixture(scope="module")
@@ -45,3 +46,25 @@ def test_batch_equals_per_bbox(spark, docs_xs, meta_xs):
         .reset_index(drop=True)
     )
     pd.testing.assert_frame_equal(batch, expected, check_dtype=False)
+
+
+def test_batch_envelope_keeps_every_box(spark, docs_xs, meta_xs, fixture_xs):
+    """A pole-touching box (its tile range is degenerate: the Mercator y
+    of lat -90 is infinite) must not narrow the batch's way_tiles filter
+    for the other boxes."""
+    nodes, ways, relations = parse_nodes(docs_xs), parse_ways(docs_xs), parse_relations(docs_xs)
+    boxes = [tuple(meta_xs["bboxes"]["dense"]), (-90.0, -180.0, 90.0, 180.0)]
+    got = (
+        bbox_extract_batch(nodes, ways, relations, boxes)
+        .where("bbox_id = 0")
+        .select("entity_type", "id")
+        .toPandas()
+        .sort_values(["entity_type", "id"])
+        .reset_index(drop=True)
+    )
+    exp = (
+        golden(fixture_xs, "extract_dense")
+        .sort_values(["entity_type", "id"])
+        .reset_index(drop=True)
+    )
+    pd.testing.assert_frame_equal(got, exp, check_dtype=False)

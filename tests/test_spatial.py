@@ -14,7 +14,7 @@ from osm_lib_spark.functions.tiles import (
     tile_x_col,
     tile_y_col,
 )
-from osm_lib_spark.operators.extract import bbox_extract
+from osm_lib_spark.operators.extract import bbox_extract, relation_closure_table
 from osm_lib_spark.operators.indexes import build_way_tiles, rel_member_indexes
 from osm_lib_spark.operators.intersections import intersections
 from osm_lib_spark.sources.span_codec import parse_nodes, parse_relations, parse_ways
@@ -88,6 +88,20 @@ def test_bbox_extract(entities, fixture_xs, meta_xs, bbox_name):
         golden(fixture_xs, f"extract_{bbox_name}"),
         sort_cols=["entity_type", "id"],
     )
+
+
+def test_relation_closure_runs_to_fixpoint(spark):
+    """A 60-deep chain (relation i is a member of relation i+1) needs 59
+    rounds; every relation's ancestors are all those above it, so the
+    closure holds exactly 60·59/2 pairs."""
+    depth = 60
+    relations = spark.createDataFrame(
+        [(i, [("RELATION", i - 1, "")] if i else []) for i in range(depth)],
+        "id long, members array<struct<type:string,member_id:long,role:string>>",
+    )
+    closure = relation_closure_table(relations)
+    assert closure.count() == depth * (depth - 1) // 2
+    assert closure.where(F.col("relation_id") >= F.col("ancestor_id")).isEmpty()
 
 
 def test_bbox_y_inversion():

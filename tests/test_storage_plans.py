@@ -23,6 +23,16 @@ def _explain_str(df) -> str:
     )
 
 
+def _executed_plans(spark) -> dict[int, str]:
+    """execution id → physical plan of every SQL execution Spark has
+    recorded; the only view of a subtree behind a localCheckpoint, which
+    explain() shows as a bare RDD scan."""
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    ex = spark._jsparkSession.sharedState().statusStore().executionsList()
+    runs = (ex.apply(i) for i in range(ex.size()))
+    return {r.executionId(): r.physicalPlanDescription() for r in runs}
+
+
 @pytest.fixture(scope="module")
 def meta_xs(fixture_xs):
     with open(os.path.join(fixture_xs, "meta.json")) as f:
@@ -42,6 +52,13 @@ def test_partitioned_way_tiles_pruning(spark, docs_xs, meta_xs, tmp_path_factory
     stored = spark.read.parquet(out)
     bbox = tuple(meta_xs["bboxes"]["dense"])
     plan = _explain_str(ways_in_bbox(stored, bbox))
+    assert "PushedFilters" in plan
+    assert "GreaterThanOrEqual(xtile" in plan and "LessThanOrEqual(ytile" in plan
+    # the extract chain keeps that pushdown: a batch of one filters the
+    # stored scan on its bbox's tile range
+    last = max(_executed_plans(spark), default=-1)
+    bbox_extract_batch(nodes, ways, parse_relations(docs_xs), [bbox], way_tiles=stored)
+    plan = "\n".join(p for i, p in _executed_plans(spark).items() if i > last)
     assert "PushedFilters" in plan
     assert "GreaterThanOrEqual(xtile" in plan and "LessThanOrEqual(ytile" in plan
 

@@ -19,7 +19,7 @@ from osm_lib_spark.sources.vex import (
 
 BANGOR = "/root/reference/src/test/resources/bangor_maine.osm.pbf"
 
-pytestmark = pytest.mark.skipif(
+needs_bangor = pytest.mark.skipif(
     not os.path.exists(BANGOR), reason="reference fixture not present"
 )
 
@@ -43,6 +43,7 @@ def bangor_entities(spark):
     return read_pbf(spark, BANGOR).cache()
 
 
+@needs_bangor
 def test_pbf_to_vex_roundtrip_bangor(spark, tmp_path, bangor_entities):
     """PBF → VEX → entities: the reference's own cross-format
     round-trip oracle, entity-level equality."""
