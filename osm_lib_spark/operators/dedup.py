@@ -238,9 +238,7 @@ def minhash_dup_pairs(
 
 
 def dup_components(
-    documents: DataFrame,
-    threshold: float = JACCARD_THRESHOLD,
-    max_iters: int = 50,
+    documents: DataFrame, threshold: float = JACCARD_THRESHOLD
 ) -> DataFrame:
     """(doc_id, component_id, keep): connected components over the
     verified MinHash duplicate graph — the keep-one-per-cluster step a
@@ -262,12 +260,10 @@ def dup_components(
     O(log n) on pathological chain graphs.
     """
     pairs = minhash_dup_pairs(documents, threshold).select("doc_a", "doc_b")
-    return components_from_pairs(documents, pairs, max_iters)
+    return components_from_pairs(documents, pairs)
 
 
-def components_from_pairs(
-    documents: DataFrame, pairs: DataFrame, max_iters: int = 50
-) -> DataFrame:
+def components_from_pairs(documents: DataFrame, pairs: DataFrame) -> DataFrame:
     """Label-propagation connected components over an arbitrary
     (doc_a, doc_b) undirected pair table — the reusable core of
     ``dup_components`` (any of the dedup pair generators can feed it).
@@ -289,7 +285,12 @@ def components_from_pairs(
     labels = edge_ids.select("doc_id", F.col("doc_id").alias("comp")).localCheckpoint(
         eager=True
     )
-    for _ in range(max_iters):
+    # Runs to the fixpoint, with no round cap: a round that does not end
+    # the loop lowers at least one label, labels only ever decrease, and
+    # each is bounded below by the smallest doc_id of its component — so
+    # only finitely many rounds can continue (at most the component
+    # diameter plus one).
+    while True:
         neigh = (
             edges.join(labels, edges.src == labels.doc_id)
             .groupBy(F.col("dst"))

@@ -28,24 +28,35 @@ library):
 
 Spark-first dataflow:
 
-* READ: the blob directory scan (`scan_blobs`) reads only the ~32-byte
-  headers (seek + skip), yielding a (path, offset, size, seq) blob
-  table. Blobs are the parallelism unit — `mapInArrow` tasks seek into
-  the file and decode their own blobs, so a planet file fans out
-  across executors without ever landing whole on the driver. All hot
-  decode paths are block-wide numpy passes: packed varints decode once
-  per COLUMN per block (`_batch_packed` concatenates every way's/
-  relation's field payloads before one vectorized decode — per-entity
-  numpy calls cost more in dispatch than decoding), dense-node tags
-  assemble via zero-terminator arithmetic, and entity columns are
-  built as Arrow arrays directly (never pandas object dicts).
-* WRITE: entities are range-partitioned type-major by id; executors
-  encode independent ≤8k-entity blocks (PBF blocks share no state —
-  delta coding and string tables reset per block). Node and way blocks
-  encode in block-wide numpy passes (`mapInArrow`): string-table codes
-  via one sorted-unique, keys_vals assembled by vectorized scatter,
-  refs as segmented-delta varints sliced per way by byte-span cumsums.
-  ONE parallel job writes every partition's blocks as a part file
+PBF and VEX (sources/vex.py) are two block formats behind one Spark
+scaffold, which lives here and which each codec feeds with its own
+per-block decode and encode:
+
+* READ (`read_blocks`): the driver indexes the file with a header-only
+  scan (`scan_blobs` here: seek + skip over ~32-byte headers, no
+  payload read) into (path, offset, size, ..., seq) rows. Blocks are
+  the parallelism unit — one `mapInArrow` task per few blocks seeks
+  into the file and hands each block's raw bytes to the codec's
+  decode, so a planet file fans out across executors without ever
+  landing whole on the driver. The PBF decode (`decode_block_arrow`)
+  is block-wide numpy: packed varints decode once per COLUMN per block
+  (`_batch_packed` concatenates every way's/relation's field payloads
+  before one vectorized decode — per-entity numpy calls cost more in
+  dispatch than decoding), dense-node tags assemble via
+  zero-terminator arithmetic, and entity columns are built as Arrow
+  arrays directly (never pandas object dicts). Per-entity arrays whose
+  counts disagree (keys vs vals, memids vs types vs roles, odd
+  keys_vals runs) raise instead of decoding shifted tags.
+* WRITE (`write_blocks`): each entity kind is range-partitioned by id
+  and id-sorted within partitions; one `mapInArrow` task per partition
+  hands every Arrow batch to the codec's encode, which returns framed
+  blocks (PBF blocks share no state — delta coding and string tables
+  reset per block). The PBF encode slices a batch into ≤8k-entity
+  blocks; the three block encoders share their kernels — list column
+  → (flat, counts), one sorted-unique string table, per-entity-reset
+  deltas, and per-entity byte spans of one varint pass per column
+  (`_entity_messages`). The kind-major union goes to ONE parallel job
+  that writes every partition's blocks as a part file
   (`compose_blob_frame`); the driver concatenates parts in partition
   order — multipart PUT + compose on an object store, O(1) driver
   memory, and the encode never serializes on driver round trips.
@@ -64,7 +75,6 @@ import zlib
 from typing import Iterator
 
 import numpy as np
-import pandas as pd
 
 # ---------------------------------------------------------------------------
 # protobuf wire primitives (numpy-vectorized for packed arrays)
@@ -446,6 +456,7 @@ def decode_primitive_block(data: bytes) -> dict:
 # ---------------------------------------------------------------------------
 
 import pyarrow as pa
+import pyarrow.compute as pc
 
 _PA_TAGS = pa.list_(pa.struct([("key", pa.string()), ("value", pa.string())]))
 _PA_REFS = pa.list_(pa.int64())
@@ -492,6 +503,8 @@ def _segmented_delta_cumsum(vals: np.ndarray, counts: np.ndarray) -> np.ndarray:
     """Per-segment cumsum of zigzag deltas (each segment's chain starts
     at 0): global cumsum minus each segment's exclusive base."""
     deltas = np_unzigzag(vals)
+    if len(deltas) == 0:  # no entity of the block has refs/members
+        return deltas
     g = np.cumsum(deltas)
     starts = np.concatenate(([0], np.cumsum(counts)[:-1]))
     base = np.where(starts > 0, g[np.maximum(starts - 1, 0)], 0)
@@ -516,7 +529,8 @@ def _kv_tags_array(kv: np.ndarray, n_nodes: int, stab: np.ndarray) -> pa.ListArr
     so every 0 is a delimiter. A rogue file could still use code 0 as a
     tag VALUE (the reference's reader only treats 0 at key positions as
     terminators); when the zero count disagrees with the node count we
-    fall back to that exact scalar state machine."""
+    fall back to that exact scalar state machine. An odd run would
+    shift every later pair, so it raises."""
     if len(kv) == 0:
         return _tags_list_array(
             np.zeros(n_nodes + 1, np.int32), np.zeros(0, object), np.zeros(0, object)
@@ -525,6 +539,11 @@ def _kv_tags_array(kv: np.ndarray, n_nodes: int, stab: np.ndarray) -> pa.ListArr
     if len(zpos) != n_nodes:
         return _kv_tags_array_scalar(kv, n_nodes, stab)
     counts = np.diff(np.concatenate(([-1], zpos))) - 1
+    if (counts % 2).any():
+        raise ValueError(
+            f"dense node {int(np.argmax(counts % 2))} of its block has an odd "
+            "keys_vals run — malformed PBF block"
+        )
     nz = kv[kv != 0]
     keys = stab[nz[0::2]]
     vals = stab[nz[1::2]]
@@ -549,6 +568,27 @@ def _kv_tags_array_scalar(kv: np.ndarray, n_nodes: int, stab: np.ndarray) -> pa.
     keys = stab[np.array(key_idx, np.int64)] if key_idx else np.zeros(0, object)
     vals = stab[np.array(val_idx, np.int64)] if val_idx else np.zeros(0, object)
     return _tags_list_array(offsets.astype(np.int32), keys, vals)
+
+
+def _check_counts(kind: str, ids: list, what: str, *counts: np.ndarray) -> None:
+    """Per-entity arrays that must pair up (keys/vals, memids/types/
+    roles) must have equal lengths: built from the first one's counts
+    alone, a mismatch would silently shift every later entity."""
+    for c in counts[1:]:
+        bad = np.flatnonzero(c != counts[0])
+        if len(bad):
+            raise ValueError(
+                f"{kind} {ids[bad[0]]}: {what} counts differ — malformed PBF block"
+            )
+
+
+def _packed_tags(kind: str, ids: list, key_slices: list, val_slices: list, stab) -> pa.ListArray:
+    """Way/relation tags from their raw packed keys/vals payloads."""
+    kc, k_counts = _batch_packed(key_slices)
+    vc, v_counts = _batch_packed(val_slices)
+    _check_counts(kind, ids, "keys and vals", k_counts, v_counts)
+    tag_offs = np.concatenate(([0], np.cumsum(k_counts))).astype(np.int32)
+    return _tags_list_array(tag_offs, stab[kc.astype(np.int64)], stab[vc.astype(np.int64)])
 
 
 def _entity_batch(
@@ -702,14 +742,11 @@ def decode_block_arrow(data: bytes):
                 pa.array(np.concatenate(([0], np.cumsum(ref_counts))), pa.int32()),
                 pa.array(refs_all, pa.int64()),
             )
-            kc, k_counts = _batch_packed(w_key_slices)
-            vc, _ = _batch_packed(w_val_slices)
-            tag_offs = np.concatenate(([0], np.cumsum(k_counts))).astype(np.int32)
             batches.append(
                 _entity_batch(
                     "way",
                     np.array(w_ids, np.int64),
-                    _tags_list_array(tag_offs, stab[kc.astype(np.int64)], stab[vc.astype(np.int64)]),
+                    _packed_tags("way", w_ids, w_key_slices, w_val_slices, stab),
                     node_ids=node_ids,
                 )
             )
@@ -717,8 +754,11 @@ def decode_block_arrow(data: bytes):
             tnames = np.array(["NODE", "WAY", "RELATION"], dtype=object)
             mem_vals, mem_counts = _batch_packed(r_mem_slices)
             mems = _segmented_delta_cumsum(mem_vals, mem_counts)
-            types, _ = _batch_packed(r_type_slices)
-            roles, _ = _batch_packed(r_role_slices)
+            types, type_counts = _batch_packed(r_type_slices)
+            roles, role_counts = _batch_packed(r_role_slices)
+            _check_counts(
+                "relation", r_ids, "memids, types and roles", mem_counts, type_counts, role_counts
+            )
             member_struct = pa.StructArray.from_arrays(
                 [
                     pa.array(tnames[types.astype(np.int64)], pa.string()),
@@ -731,14 +771,11 @@ def decode_block_arrow(data: bytes):
                 pa.array(np.concatenate(([0], np.cumsum(mem_counts))), pa.int32()),
                 member_struct,
             )
-            kc, k_counts = _batch_packed(r_key_slices)
-            vc, _ = _batch_packed(r_val_slices)
-            tag_offs = np.concatenate(([0], np.cumsum(k_counts))).astype(np.int32)
             batches.append(
                 _entity_batch(
                     "relation",
                     np.array(r_ids, np.int64),
-                    _tags_list_array(tag_offs, stab[kc.astype(np.int64)], stab[vc.astype(np.int64)]),
+                    _packed_tags("relation", r_ids, r_key_slices, r_val_slices, stab),
                     members=members,
                 )
             )
@@ -746,141 +783,98 @@ def decode_block_arrow(data: bytes):
 
 
 # ---------------------------------------------------------------------------
-# PrimitiveBlock encode ← pandas frames
+# PrimitiveBlock encode ← Arrow batches
 # ---------------------------------------------------------------------------
 
 
-class _StringTable:
-    """Per-block string table; index 0 holds "" and is RESERVED as the
-    keys_vals terminator — no string (not even an empty tag value) may
-    encode as code 0, so "" gets a fresh index ≥ 1 on first use, exactly
-    like the reference's StringTable (StringTable.java:20-34, whose
-    code map never contains the sentinel entry)."""
-
-    def __init__(self) -> None:
-        self.index: dict[str, int] = {}
-        self.strings: list[str] = [""]
-
-    def code(self, s: str) -> int:
-        if s is None:
-            s = ""
-        got = self.index.get(s)
-        if got is None:
-            got = len(self.strings)
-            self.index[s] = got
-            self.strings.append(s)
-        return got
-
-    def encode(self) -> bytes:
-        return b"".join(
-            _enc_field_bytes(1, s.encode("utf-8")) for s in self.strings
-        )
+def _i64(arr) -> np.ndarray:
+    return arr.to_numpy(zero_copy_only=False).astype(np.int64)
 
 
-def _as_list(x) -> list:
-    """Arrow hands array columns to pandas as numpy arrays (or None);
-    normalize to a plain list."""
-    if x is None or (isinstance(x, float) and np.isnan(x)):
-        return []
-    return list(x)
+def _list_flat(col) -> tuple[pa.Array, np.ndarray]:
+    """list column → (flattened child array, per-row length; null → 0)."""
+    if isinstance(col, pa.ChunkedArray):  # pragma: no cover
+        col = col.combine_chunks()
+    counts = pc.fill_null(pc.list_value_length(col), 0)
+    return col.flatten(), _i64(counts)
 
 
-def _encode_block(kind: str, frame: pd.DataFrame) -> bytes:
-    """One type-pure PrimitiveBlock (≤8000 rows) → block bytes."""
-    st = _StringTable()
-    group = b""
-    if kind == "node":
-        ids = frame["id"].to_numpy(np.int64)
-        lats = frame["fixed_lat"].to_numpy(np.int64)
-        lons = frame["fixed_lon"].to_numpy(np.int64)
-        kv: list[int] = []
-        for tags in frame["tags"]:
-            for t in _as_list(tags):
-                kv.append(st.code(t["key"]))
-                kv.append(st.code(t["value"]))
-            kv.append(0)
-        dense = (
-            _enc_packed(1, np_zigzag(np.diff(ids, prepend=0)))
-            + _enc_packed(8, np_zigzag(np.diff(lats, prepend=0)))
-            + _enc_packed(9, np_zigzag(np.diff(lons, prepend=0)))
-            + _enc_packed(10, np.array(kv, dtype=np.uint64))
-        )
-        group = _enc_field_bytes(2, dense)
-    elif kind == "way":
-        msgs = []
-        for row in frame.itertuples(index=False):
-            tags = _as_list(row.tags)
-            keys = [st.code(t["key"]) for t in tags]
-            vals = [st.code(t["value"]) for t in tags]
-            refs = np.asarray(_as_list(row.node_ids), dtype=np.int64)
-            msg = (
-                _enc_field_varint(1, int(row.id))
-                + _enc_packed(2, np.array(keys, np.uint64))
-                + _enc_packed(3, np.array(vals, np.uint64))
-                + _enc_packed(8, np_zigzag(np.diff(refs, prepend=0)))
-            )
-            msgs.append(_enc_field_bytes(3, msg))
-        group = b"".join(msgs)
-    elif kind == "relation":
-        tcode = {"NODE": 0, "WAY": 1, "RELATION": 2}
-        msgs = []
-        for row in frame.itertuples(index=False):
-            tags = _as_list(row.tags)
-            keys = [st.code(t["key"]) for t in tags]
-            vals = [st.code(t["value"]) for t in tags]
-            members = _as_list(row.members)
-            roles = [st.code(m["role"]) for m in members]
-            memids = np.asarray([m["member_id"] for m in members], dtype=np.int64)
-            types = [tcode[m["type"]] for m in members]
-            msg = (
-                _enc_field_varint(1, int(row.id))
-                + _enc_packed(2, np.array(keys, np.uint64))
-                + _enc_packed(3, np.array(vals, np.uint64))
-                + _enc_packed(8, np.array(roles, np.uint64))
-                + _enc_packed(9, np_zigzag(np.diff(memids, prepend=0)))
-                + _enc_packed(10, np.array(types, np.uint64))
-            )
-            msgs.append(_enc_field_bytes(4, msg))
-        group = b"".join(msgs)
-    else:  # pragma: no cover
-        raise ValueError(kind)
-    return _enc_field_bytes(1, st.encode()) + _enc_field_bytes(2, group)
+def _strs(arr, null_as_empty: bool = False) -> np.ndarray:
+    """string array → object ndarray; tag values and member roles encode
+    a null as ""."""
+    if null_as_empty:
+        arr = pc.fill_null(arr, "")
+    return arr.to_numpy(zero_copy_only=False)
 
 
-def _encode_dense_block_arrow(chunk: "pa.RecordBatch") -> bytes:
-    """Node PrimitiveBlock from an Arrow batch with ZERO per-node
-    Python: tag key/value strings flatten to two object arrays, a
-    sorted-unique pass assigns 1-based string-table codes (index 0
-    stays the reserved terminator), and the 0-terminated keys_vals
-    stream is assembled by vectorized scatter."""
-    ids = chunk.column("id").to_numpy(zero_copy_only=False).astype(np.int64)
-    lats = chunk.column("fixed_lat").to_numpy(zero_copy_only=False).astype(np.int64)
-    lons = chunk.column("fixed_lon").to_numpy(zero_copy_only=False).astype(np.int64)
-    tags = chunk.column("tags")
-    if isinstance(tags, pa.ChunkedArray):  # pragma: no cover
-        tags = tags.combine_chunks()
-    import pyarrow.compute as pc
+def _string_table(*cols: np.ndarray) -> tuple[bytes, list[np.ndarray]]:
+    """One sorted-unique pass over a block's strings → (stringtable
+    message bytes, uint64 codes per input column).
 
-    counts = pc.fill_null(pc.list_value_length(tags), 0).to_numpy(
-        zero_copy_only=False
-    ).astype(np.int64)
-    flat = tags.flatten()
-    keys = flat.field("key").to_numpy(zero_copy_only=False)
-    vals = flat.field("value").to_numpy(zero_copy_only=False)
-    vals = np.array(["" if v is None else v for v in vals], dtype=object) if any(
-        v is None for v in vals
-    ) else vals
-
-    n_pairs = int(counts.sum())
-    if n_pairs:
-        all_strs = np.concatenate([keys, vals])
+    Codes are 1-based: index 0 holds "" and is RESERVED as the dense
+    keys_vals terminator, so no string (not even an empty tag value)
+    encodes as code 0 — like the reference's StringTable, whose code map
+    never contains the sentinel entry (StringTable.java:20-34)."""
+    all_strs = np.concatenate([np.asarray(c, dtype=object) for c in cols])
+    if len(all_strs):
         uniq, inv = np.unique(all_strs, return_inverse=True)
-        codes = (inv + 1).astype(np.uint64)  # 1-based: 0 is the terminator
-        kcodes, vcodes = codes[:n_pairs], codes[n_pairs:]
+        codes = (inv + 1).astype(np.uint64)
         strings = [""] + [str(u) for u in uniq]
     else:
-        kcodes = vcodes = np.zeros(0, np.uint64)
+        codes = np.zeros(0, np.uint64)
         strings = [""]
+    st = b"".join(_enc_field_bytes(1, s.encode("utf-8")) for s in strings)
+    return st, np.split(codes, np.cumsum([len(c) for c in cols])[:-1])
+
+
+def _seg_deltas(vals: np.ndarray, counts: np.ndarray) -> np.ndarray:
+    """Delta chains that reset per entity (way refs, relation memids):
+    diff globally, then restore the absolute value at each entity's
+    first element."""
+    deltas = np.diff(vals, prepend=0)
+    starts = np.concatenate(([0], np.cumsum(counts)))[:-1][counts > 0]
+    deltas[starts] = vals[starts]
+    return deltas
+
+
+def _seg_varint_spans(vals: np.ndarray, counts: np.ndarray):
+    """Encode a flattened uint64 column to varints and return
+    (buf, lo, hi): per-entity byte spans via cumsum over the entity
+    segment lengths."""
+    enc, lens = np_encode_varints_with_lens(vals)
+    byte_cum = np.concatenate(([0], np.cumsum(lens)))
+    starts = np.concatenate(([0], np.cumsum(counts)))[:-1]
+    ends = np.cumsum(counts)
+    return enc.tobytes(), byte_cum[starts].tolist(), byte_cum[ends].tolist()
+
+
+def _entity_messages(group_fno: int, ids: np.ndarray, columns: list) -> bytes:
+    """Way (group field 3) or relation (4) messages: field 1 is the id,
+    then one packed field per (field_no, flat uint64 column, per-entity
+    counts) — omitted where the entity's count is 0. Every column
+    encodes in ONE varint pass; per-entity Python only slices the
+    precomputed buffers into protobuf messages."""
+    spans = [(fno, counts.tolist(), *_seg_varint_spans(vals, counts)) for fno, vals, counts in columns]
+    msgs = []
+    for i, eid in enumerate(ids.tolist()):
+        msg = [_enc_field_varint(1, eid)]
+        for fno, counts, buf, lo, hi in spans:
+            if counts[i]:
+                msg.append(_enc_field_bytes(fno, buf[lo[i] : hi[i]]))
+        msgs.append(_enc_field_bytes(group_fno, b"".join(msg)))
+    return b"".join(msgs)
+
+
+def _encode_dense_block_arrow(chunk: pa.RecordBatch) -> bytes:
+    """Node PrimitiveBlock from an Arrow batch with ZERO per-node
+    Python: the 0-terminated keys_vals stream is assembled by
+    vectorized scatter of the string-table codes."""
+    ids, lats, lons = (_i64(chunk.column(c)) for c in ("id", "fixed_lat", "fixed_lon"))
+    tags, counts = _list_flat(chunk.column("tags"))
+    st, (kcodes, vcodes) = _string_table(
+        _strs(tags.field("key")), _strs(tags.field("value"), null_as_empty=True)
+    )
+    n_pairs = len(kcodes)
 
     # keys_vals stream: per node (k, v)*count then a 0 terminator
     pair_offs = np.concatenate(([0], np.cumsum(counts)))
@@ -893,198 +887,65 @@ def _encode_dense_block_arrow(chunk: "pa.RecordBatch") -> bytes:
         kv[pos] = kcodes
         kv[pos + 1] = vcodes
 
-    st = b"".join(_enc_field_bytes(1, s.encode("utf-8")) for s in strings)
     dense = (
         _enc_packed(1, np_zigzag(np.diff(ids, prepend=0)))
         + _enc_packed(8, np_zigzag(np.diff(lats, prepend=0)))
         + _enc_packed(9, np_zigzag(np.diff(lons, prepend=0)))
         + _enc_packed(10, kv)
     )
-    group = _enc_field_bytes(2, dense)
+    return _enc_field_bytes(1, st) + _enc_field_bytes(2, _enc_field_bytes(2, dense))
+
+
+def _encode_way_block_arrow(chunk: pa.RecordBatch) -> bytes:
+    """Way PrimitiveBlock from an Arrow batch (keys, vals, per-way-reset
+    ref deltas)."""
+    refs, ref_counts = _list_flat(chunk.column("node_ids"))
+    tags, tag_counts = _list_flat(chunk.column("tags"))
+    st, (kcodes, vcodes) = _string_table(
+        _strs(tags.field("key")), _strs(tags.field("value"), null_as_empty=True)
+    )
+    group = _entity_messages(
+        3,
+        _i64(chunk.column("id")),
+        [
+            (2, kcodes, tag_counts),
+            (3, vcodes, tag_counts),
+            (8, np_zigzag(_seg_deltas(_i64(refs), ref_counts)), ref_counts),
+        ],
+    )
     return _enc_field_bytes(1, st) + _enc_field_bytes(2, group)
 
 
-def _encode_way_block_arrow(chunk: "pa.RecordBatch") -> bytes:
-    """Way PrimitiveBlock from an Arrow batch: refs/tags encode in
-    block-wide numpy passes (per-way-reset delta via segmented diff,
-    one varint scatter, byte spans via cumsum); the only per-way Python
-    left is slicing the precomputed buffers into protobuf messages."""
-    import pyarrow.compute as pc
-
-    ids = chunk.column("id").to_numpy(zero_copy_only=False).astype(np.int64)
-    refs_col = chunk.column("node_ids")
-    if isinstance(refs_col, pa.ChunkedArray):  # pragma: no cover
-        refs_col = refs_col.combine_chunks()
-    ref_counts = (
-        pc.fill_null(pc.list_value_length(refs_col), 0)
-        .to_numpy(zero_copy_only=False)
-        .astype(np.int64)
+def _encode_rel_block_arrow(chunk: pa.RecordBatch) -> bytes:
+    """Relation PrimitiveBlock from an Arrow batch (keys, vals, roles,
+    per-relation-reset member-id deltas, member types). An unknown
+    member type raises: PBF codes only NODE/WAY/RELATION."""
+    members, m_counts = _list_flat(chunk.column("members"))
+    tags, tag_counts = _list_flat(chunk.column("tags"))
+    st, (kcodes, vcodes, rcodes) = _string_table(
+        _strs(tags.field("key")),
+        _strs(tags.field("value"), null_as_empty=True),
+        _strs(members.field("role"), null_as_empty=True),
     )
-    refs = refs_col.flatten().to_numpy(zero_copy_only=False).astype(np.int64)
-    ref_starts = np.concatenate(([0], np.cumsum(ref_counts)))[:-1]
-    # per-way delta chains: diff globally, restore absolutes at starts
-    deltas = np.diff(refs, prepend=0)
-    nonempty = ref_counts > 0
-    deltas[ref_starts[nonempty]] = refs[ref_starts[nonempty]]
-    ref_bytes, ref_lens = np_encode_varints_with_lens(np_zigzag(deltas))
-    ref_byte_cum = np.concatenate(([0], np.cumsum(ref_lens)))
-    ref_ends = np.cumsum(ref_counts)
-    ref_b_lo = ref_byte_cum[ref_starts]
-    ref_b_hi = ref_byte_cum[ref_ends]
-    ref_buf = ref_bytes.tobytes()
-
-    tags = chunk.column("tags")
-    if isinstance(tags, pa.ChunkedArray):  # pragma: no cover
-        tags = tags.combine_chunks()
-    tag_counts = (
-        pc.fill_null(pc.list_value_length(tags), 0)
-        .to_numpy(zero_copy_only=False)
-        .astype(np.int64)
-    )
-    flat = tags.flatten()
-    keys = flat.field("key").to_numpy(zero_copy_only=False)
-    vals = flat.field("value").to_numpy(zero_copy_only=False)
-    n_pairs = int(tag_counts.sum())
-    if n_pairs:
-        if any(v is None for v in vals):
-            vals = np.array(["" if v is None else v for v in vals], dtype=object)
-        all_strs = np.concatenate([keys, vals])
-        uniq, inv = np.unique(all_strs, return_inverse=True)
-        codes = (inv + 1).astype(np.uint64)
-        key_bytes, key_lens = np_encode_varints_with_lens(codes[:n_pairs])
-        val_bytes, val_lens = np_encode_varints_with_lens(codes[n_pairs:])
-        strings = [""] + [str(u) for u in uniq]
-    else:
-        key_bytes = val_bytes = np.zeros(0, np.uint8)
-        key_lens = val_lens = np.zeros(0, np.int64)
-        strings = [""]
-    tag_starts = np.concatenate(([0], np.cumsum(tag_counts)))[:-1]
-    tag_ends = np.cumsum(tag_counts)
-    k_cum = np.concatenate(([0], np.cumsum(key_lens)))
-    v_cum = np.concatenate(([0], np.cumsum(val_lens)))
-    k_lo, k_hi = k_cum[tag_starts], k_cum[tag_ends]
-    v_lo, v_hi = v_cum[tag_starts], v_cum[tag_ends]
-    k_buf, v_buf = key_bytes.tobytes(), val_bytes.tobytes()
-
-    msgs = []
-    for i in range(len(ids)):
-        msg = [_enc_field_varint(1, int(ids[i]))]
-        if tag_counts[i]:
-            kb = k_buf[k_lo[i] : k_hi[i]]
-            vb = v_buf[v_lo[i] : v_hi[i]]
-            msg.append(_enc_varint((2 << 3) | 2) + _enc_varint(len(kb)) + kb)
-            msg.append(_enc_varint((3 << 3) | 2) + _enc_varint(len(vb)) + vb)
-        if ref_counts[i]:
-            rb = ref_buf[ref_b_lo[i] : ref_b_hi[i]]
-            msg.append(_enc_varint((8 << 3) | 2) + _enc_varint(len(rb)) + rb)
-        msgs.append(_enc_field_bytes(3, b"".join(msg)))
-    st = b"".join(_enc_field_bytes(1, s.encode("utf-8")) for s in strings)
-    return _enc_field_bytes(1, st) + _enc_field_bytes(2, b"".join(msgs))
-
-
-def _seg_varint_spans(vals: np.ndarray, counts: np.ndarray):
-    """Encode a flattened uint64 column to varints and return
-    (buf, lo, hi): per-entity byte spans via cumsum over the entity
-    segment lengths — the shared slicing pattern of the Arrow block
-    encoders."""
-    enc, lens = np_encode_varints_with_lens(vals)
-    byte_cum = np.concatenate(([0], np.cumsum(lens)))
-    starts = np.concatenate(([0], np.cumsum(counts)))[:-1]
-    ends = np.cumsum(counts)
-    return enc.tobytes(), byte_cum[starts], byte_cum[ends]
-
-
-def _encode_rel_block_arrow(chunk: "pa.RecordBatch") -> bytes:
-    """Relation PrimitiveBlock from an Arrow batch — the same
-    block-wide numpy passes as the way encoder (one sorted-unique
-    string table over keys+values+roles, per-relation-reset member-id
-    delta via segmented diff, one varint pass per column); per-relation
-    Python only slices the precomputed buffers into protobuf messages.
-    Replaces the last itertuples hot loop in the PBF sink."""
-    import pyarrow.compute as pc
-
-    ids = chunk.column("id").to_numpy(zero_copy_only=False).astype(np.int64)
-    members = chunk.column("members")
-    if isinstance(members, pa.ChunkedArray):  # pragma: no cover
-        members = members.combine_chunks()
-    m_counts = (
-        pc.fill_null(pc.list_value_length(members), 0)
-        .to_numpy(zero_copy_only=False)
-        .astype(np.int64)
-    )
-    mflat = members.flatten()
-    mtypes = mflat.field("type").to_numpy(zero_copy_only=False)
-    mids = mflat.field("member_id").to_numpy(zero_copy_only=False).astype(np.int64)
-    roles = mflat.field("role").to_numpy(zero_copy_only=False)
-    if any(r is None for r in roles):
-        roles = np.array(["" if r is None else r for r in roles], dtype=object)
-
-    tags = chunk.column("tags")
-    if isinstance(tags, pa.ChunkedArray):  # pragma: no cover
-        tags = tags.combine_chunks()
-    tag_counts = (
-        pc.fill_null(pc.list_value_length(tags), 0)
-        .to_numpy(zero_copy_only=False)
-        .astype(np.int64)
-    )
-    tflat = tags.flatten()
-    keys = tflat.field("key").to_numpy(zero_copy_only=False)
-    vals = tflat.field("value").to_numpy(zero_copy_only=False)
-    if any(v is None for v in vals):
-        vals = np.array(["" if v is None else v for v in vals], dtype=object)
-
-    n_pairs = int(tag_counts.sum())
-    n_mem = int(m_counts.sum())
-    all_strs = np.concatenate(
-        [np.asarray(a, dtype=object) for a in (keys, vals, roles)]
-    ) if (n_pairs or n_mem) else np.zeros(0, dtype=object)
-    if len(all_strs):
-        uniq, inv = np.unique(all_strs, return_inverse=True)
-        codes = (inv + 1).astype(np.uint64)
-        kcodes = codes[:n_pairs]
-        vcodes = codes[n_pairs : 2 * n_pairs]
-        rcodes = codes[2 * n_pairs :]
-        strings = [""] + [str(u) for u in uniq]
-    else:
-        kcodes = vcodes = rcodes = np.zeros(0, np.uint64)
-        strings = [""]
-
-    # per-relation member-id delta chains (reset per relation, like refs)
-    m_starts = np.concatenate(([0], np.cumsum(m_counts)))[:-1]
-    deltas = np.diff(mids, prepend=0)
-    nonempty = m_counts > 0
-    deltas[m_starts[nonempty]] = mids[m_starts[nonempty]]
+    mtypes = _strs(members.field("type"))
     tcodes = np.select(
         [mtypes == "NODE", mtypes == "WAY", mtypes == "RELATION"], [0, 1, 2], default=-1
     )
     if (tcodes < 0).any():
         raise ValueError(f"unknown relation member type {mtypes[tcodes < 0][0]!r}")
-    tcodes = tcodes.astype(np.uint64)
-
-    k_buf, k_lo, k_hi = _seg_varint_spans(kcodes, tag_counts)
-    v_buf, v_lo, v_hi = _seg_varint_spans(vcodes, tag_counts)
-    r_buf, r_lo, r_hi = _seg_varint_spans(rcodes, m_counts)
-    d_buf, d_lo, d_hi = _seg_varint_spans(np_zigzag(deltas), m_counts)
-    t_buf, t_lo, t_hi = _seg_varint_spans(tcodes, m_counts)
-
-    msgs = []
-    for i in range(len(ids)):
-        msg = [_enc_field_varint(1, int(ids[i]))]
-        if tag_counts[i]:
-            kb = k_buf[k_lo[i] : k_hi[i]]
-            vb = v_buf[v_lo[i] : v_hi[i]]
-            msg.append(_enc_varint((2 << 3) | 2) + _enc_varint(len(kb)) + kb)
-            msg.append(_enc_varint((3 << 3) | 2) + _enc_varint(len(vb)) + vb)
-        if m_counts[i]:
-            rb = r_buf[r_lo[i] : r_hi[i]]
-            db = d_buf[d_lo[i] : d_hi[i]]
-            tb = t_buf[t_lo[i] : t_hi[i]]
-            msg.append(_enc_varint((8 << 3) | 2) + _enc_varint(len(rb)) + rb)
-            msg.append(_enc_varint((9 << 3) | 2) + _enc_varint(len(db)) + db)
-            msg.append(_enc_varint((10 << 3) | 2) + _enc_varint(len(tb)) + tb)
-        msgs.append(_enc_field_bytes(4, b"".join(msg)))
-    st = b"".join(_enc_field_bytes(1, s.encode("utf-8")) for s in strings)
-    return _enc_field_bytes(1, st) + _enc_field_bytes(2, b"".join(msgs))
+    deltas = _seg_deltas(_i64(members.field("member_id")), m_counts)
+    group = _entity_messages(
+        4,
+        _i64(chunk.column("id")),
+        [
+            (2, kcodes, tag_counts),
+            (3, vcodes, tag_counts),
+            (8, rcodes, m_counts),
+            (9, np_zigzag(deltas), m_counts),
+            (10, tcodes.astype(np.uint64), m_counts),
+        ],
+    )
+    return _enc_field_bytes(1, st) + _enc_field_bytes(2, group)
 
 
 DEFLATE_LEVEL = 3  # zlib level: ~6x faster than the default 6 at ~1% worse
@@ -1114,7 +975,7 @@ def encode_header_block(writing_program: str = "osm_lib_spark") -> bytes:
 
 
 # ---------------------------------------------------------------------------
-# Spark integration
+# Spark integration: the block scaffold PBF and VEX share
 # ---------------------------------------------------------------------------
 
 ENTITY_SCHEMA = (
@@ -1125,43 +986,158 @@ ENTITY_SCHEMA = (
 
 BLOCK_SIZE = 8000  # PBFOutput.java:128 — ≤8k entities per block
 
+# Task count of a read: never more than one task per BLOBS_PER_TASK
+# blocks, but also never more tasks than ~1× cluster parallelism when the
+# file is small — measured 0.8s of pure task/Python-worker round-trip
+# overhead at 91 tiny tasks on local[32] vs 0.3s at 32.
+BLOBS_PER_TASK = 16
 
-def read_pbf(spark, path: str, blobs_per_task: int = 16):
-    """Distributed PBF read → unified entity DataFrame.
+_BLOB_SCHEMA = "type_rank int, first_id long, blob binary"
+_BLOB_PA_SCHEMA = pa.schema(
+    [("type_rank", pa.int32()), ("first_id", pa.int64()), ("blob", pa.binary())]
+)
+_KINDS = ("node", "way", "relation")  # file order: type-major, like PBFOutput
 
-    The driver indexes blob offsets (header-only scan); executors seek
-    + inflate + decode their own blobs via ``mapInArrow`` — entity
-    columns are built as Arrow arrays directly (``decode_block_arrow``),
-    so dense nodes never touch per-row Python or pandas object dicts.
-    At planet scale each blob is ~8k entities, so task granularity is
-    tuned with ``blobs_per_task`` and the index table's partitioning.
+
+def read_blocks(spark, rows: list, index_schema: str, decode):
+    """Distributed block read → unified entity DataFrame.
+
+    ``rows`` is the driver's header-only block index (it must carry
+    path, offset, size and seq columns, named in ``index_schema``).
+    Executors seek + read their own blocks via ``mapInArrow`` and hand
+    each index row and its raw bytes to ``decode(row, raw)``, which
+    returns the block's entities as Arrow RecordBatches.
     """
-    rows = scan_blobs(path)
-    header_blobs = [r for r in rows if r[3] == "OSMHeader"]
-    with open(path, "rb") as f:
-        for _, off, size, _, _ in header_blobs:
-            f.seek(off)
-            check_header_block(_inflate_blob(f.read(size)))
-    data_rows = [r for r in rows if r[3] == "OSMData"]
-    # Task count: never more than one task per blobs_per_task blobs, but
-    # also never more tasks than ~1× cluster parallelism when the file is
-    # small — measured 0.8s of pure task/Python-worker round-trip
-    # overhead at 91 tiny tasks on local[32] vs 0.3s at 32.
     dp = spark.sparkContext.defaultParallelism
-    n_part = max(1, min(len(data_rows), max(dp, len(data_rows) // blobs_per_task)))
-    idx = spark.createDataFrame(
-        data_rows, "path string, offset long, size long, kind string, seq long"
-    ).repartition(n_part, "seq")
+    n_part = max(1, min(len(rows), max(dp, len(rows) // BLOBS_PER_TASK)))
+    idx = spark.createDataFrame(rows, index_schema).repartition(n_part, "seq")
 
-    def decode(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+    def read(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         for batch in batches:
             for r in batch.to_pylist():  # a handful of index rows per task
                 with open(r["path"], "rb") as f:
-                    f.seek(int(r["offset"]))
-                    data = f.read(int(r["size"]))
-                yield from decode_block_arrow(_inflate_blob(data))
+                    f.seek(r["offset"])
+                    raw = f.read(r["size"])
+                yield from decode(r, raw)
 
-    return idx.mapInArrow(decode, schema=ENTITY_SCHEMA)
+    return idx.mapInArrow(read, schema=ENTITY_SCHEMA)
+
+
+def write_blocks(path: str, nodes, ways, relations, encode, header: bytes = b"") -> int:
+    """Distributed block sink: encode independent blocks in executors,
+    write them to ``path`` in (type, first_id) order.
+
+    Each kind is range-partitioned by id and id-sorted within
+    partitions, then every Arrow batch goes to ``encode(kind, batch)``,
+    which yields (first_id, framed block bytes). Blocks share NO state,
+    so the encode is embarrassingly parallel; the kind-major union of
+    range-partitioned, partition-sorted frames is already in file order,
+    and only the byte concatenation is sequential
+    (``compose_blob_frame``). Returns the number of blocks written.
+    """
+    from pyspark.sql import functions as F  # noqa: N812
+
+    def encoder(kind: str):
+        rank = _KINDS.index(kind)
+
+        def enc(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+            for batch in batches:
+                for first_id, blob in encode(kind, batch):
+                    yield pa.RecordBatch.from_arrays(
+                        [
+                            pa.array([rank], pa.int32()),
+                            pa.array([first_id], pa.int64()),
+                            pa.array([blob], pa.binary()),
+                        ],
+                        schema=_BLOB_PA_SCHEMA,
+                    )
+
+        return enc
+
+    parts = []
+    for kind, df in zip(_KINDS, (nodes, ways, relations)):
+        if df is None:
+            continue
+        n_part = max(1, min(df.sparkSession.sparkContext.defaultParallelism, 64))
+        arranged = df.repartitionByRange(n_part, F.col("id")).sortWithinPartitions("id")
+        parts.append(arranged.mapInArrow(encoder(kind), schema=_BLOB_SCHEMA))
+    if not parts:
+        raise ValueError("nodes, ways and relations are all None — nothing to write")
+    blobs = parts[0]
+    for p in parts[1:]:
+        blobs = blobs.unionByName(p)
+    return compose_blob_frame(blobs, path, header=header)
+
+
+def compose_blob_frame(blobs, path: str, header: bytes = b"") -> int:
+    """Write an ordered blob frame to ``path`` multipart-compose style:
+    ONE parallel job in which every partition writes its own part file,
+    then the driver concatenates parts in partition order.
+
+    The frame must be (type, first_id)-ordered partition-by-partition —
+    which the sinks' kind-major union over range-partitioned,
+    partition-sorted frames already is — so no orderBy is needed.
+    Earlier shapes were strictly worse: ``collect()`` held the whole
+    file on the driver, and ``toLocalIterator`` ran one JOB per
+    partition (0.04s × 96 partitions of pure scheduling, and the encode
+    itself serialized). On an object store the part files are multipart
+    PUTs and the concat is the compose call; driver memory stays O(1).
+    """
+    import shutil
+    import tempfile as _tf
+
+    from pyspark.sql import functions as F  # noqa: N812
+
+    out_dir = os.path.dirname(os.path.abspath(path)) or "."
+    tmpdir = _tf.mkdtemp(prefix=".blobparts_", dir=out_dir)
+
+    def dump(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        from pyspark import TaskContext
+
+        idx = TaskContext.get().partitionId()
+        n = 0
+        with open(os.path.join(tmpdir, f"part-{idx:08d}"), "wb") as f:
+            for batch in batches:
+                for b in batch.column("blob").to_pylist():
+                    f.write(b)
+                    n += 1
+        yield pa.RecordBatch.from_arrays([pa.array([n], pa.int64())], names=["n"])
+
+    try:
+        total = (
+            blobs.mapInArrow(dump, "n long").agg(F.sum("n")).collect()[0][0] or 0
+        )
+        with open(path, "wb") as outf:
+            if header:
+                outf.write(header)
+            for name in sorted(os.listdir(tmpdir)):
+                with open(os.path.join(tmpdir, name), "rb") as pf:
+                    shutil.copyfileobj(pf, outf)
+    finally:
+        shutil.rmtree(tmpdir, ignore_errors=True)
+    return int(total)
+
+
+def _decode_pbf_block(row: dict, raw: bytes) -> list:
+    return decode_block_arrow(_inflate_blob(raw))
+
+
+def read_pbf(spark, path: str):
+    """Distributed PBF read → unified entity DataFrame (``read_blocks``
+    over the OSMData blobs; the OSMHeader's required features are
+    checked on the driver first)."""
+    rows = scan_blobs(path)
+    with open(path, "rb") as f:
+        for _, off, size, kind, _ in rows:
+            if kind == "OSMHeader":
+                f.seek(off)
+                check_header_block(_inflate_blob(f.read(size)))
+    return read_blocks(
+        spark,
+        [r for r in rows if r[3] == "OSMData"],
+        "path string, offset long, size long, kind string, seq long",
+        _decode_pbf_block,
+    )
 
 
 def pbf_nodes(entities):
@@ -1188,109 +1164,25 @@ def pbf_relations(entities):
     )
 
 
-def write_pbf(path: str, nodes, ways, relations, block_size: int = BLOCK_SIZE):
-    """Distributed PBF sink: encode independent blocks in executors,
-    stream them to the file in (type, first_id) order on the driver.
+_BLOCK_ENCODERS = {
+    "node": _encode_dense_block_arrow,
+    "way": _encode_way_block_arrow,
+    "relation": _encode_rel_block_arrow,
+}
 
-    PBF blocks share NO state (per-block string table + delta reset),
-    so the encode is embarrassingly parallel; only the byte
-    concatenation is sequential — the same shape as a multipart
-    object-store compose.
-    """
-    from pyspark.sql import functions as F  # noqa: N812
 
-    blob_schema = "type_rank int, first_id long, blob binary"
+def _encode_pbf_blocks(kind: str, batch: pa.RecordBatch) -> Iterator[tuple[int, bytes]]:
+    """An id-sorted Arrow batch → ≤BLOCK_SIZE-entity framed OSMData blobs."""
+    for lo in range(0, batch.num_rows, BLOCK_SIZE):
+        chunk = batch.slice(lo, BLOCK_SIZE)
+        block = _BLOCK_ENCODERS[kind](chunk)
+        yield chunk.column("id")[0].as_py(), _blob_bytes("OSMData", block)
 
-    blob_pa_schema = pa.schema(
-        [("type_rank", pa.int32()), ("first_id", pa.int64()), ("blob", pa.binary())]
+
+def write_pbf(path: str, nodes, ways, relations) -> int:
+    """Distributed PBF sink (``write_blocks`` with the Arrow block
+    encoders, after an OSMHeader blob). Returns the number of data
+    blobs written."""
+    return write_blocks(
+        path, nodes, ways, relations, _encode_pbf_blocks, header=encode_header_block()
     )
-
-    def arrow_enc(rank: int, block_fn):
-        # rows arrive id-sorted within the partition (sortWithinPartitions);
-        # each Arrow batch is chunked into ≤block_size blocks with
-        # block-wide vectorized encode — no per-entity Python hot loops
-        def enc(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-            for batch in batches:
-                for lo in range(0, batch.num_rows, block_size):
-                    chunk = batch.slice(lo, block_size)
-                    if chunk.num_rows == 0:
-                        continue
-                    blob = _blob_bytes("OSMData", block_fn(chunk))
-                    yield pa.RecordBatch.from_arrays(
-                        [
-                            pa.array([rank], pa.int32()),
-                            pa.array([chunk.column("id")[0].as_py()], pa.int64()),
-                            pa.array([blob], pa.binary()),
-                        ],
-                        schema=blob_pa_schema,
-                    )
-
-        return enc
-
-    parts = []
-    for kind, df in (("node", nodes), ("way", ways), ("relation", relations)):
-        if df is None:
-            continue
-        n_part = max(1, min(df.sparkSession.sparkContext.defaultParallelism, 64))
-        arranged = df.repartitionByRange(n_part, F.col("id")).sortWithinPartitions("id")
-        if kind == "node":
-            parts.append(arranged.mapInArrow(arrow_enc(0, _encode_dense_block_arrow), schema=blob_schema))
-        elif kind == "way":
-            parts.append(arranged.mapInArrow(arrow_enc(1, _encode_way_block_arrow), schema=blob_schema))
-        else:
-            parts.append(arranged.mapInArrow(arrow_enc(2, _encode_rel_block_arrow), schema=blob_schema))
-    if not parts:
-        raise ValueError("write_pbf: nodes, ways and relations are all None — nothing to write")
-    blobs = parts[0]
-    for p in parts[1:]:
-        blobs = blobs.unionByName(p)
-    return compose_blob_frame(blobs, path, header=encode_header_block())
-
-
-def compose_blob_frame(blobs, path: str, header: bytes = b"") -> int:
-    """Write an ordered blob frame to ``path`` multipart-compose style:
-    ONE parallel job in which every partition writes its own part file,
-    then the driver concatenates parts in partition order.
-
-    The frame must be (type, first_id)-ordered partition-by-partition —
-    which the sinks' kind-major union over range-partitioned,
-    partition-sorted frames already is — so no orderBy is needed.
-    Earlier shapes were strictly worse: ``collect()`` held the whole
-    file on the driver, and ``toLocalIterator`` ran one JOB per
-    partition (0.04s × 96 partitions of pure scheduling, and the encode
-    itself serialized). On an object store the part files are multipart
-    PUTs and the concat is the compose call; driver memory stays O(1).
-    """
-    import shutil
-    import tempfile as _tf
-
-    from pyspark.sql import functions as F  # noqa: N812
-
-    out_dir = os.path.dirname(os.path.abspath(path)) or "."
-    tmpdir = _tf.mkdtemp(prefix=".blobparts_", dir=out_dir)
-
-    def dump(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from pyspark import TaskContext
-
-        idx = TaskContext.get().partitionId()
-        n = 0
-        with open(os.path.join(tmpdir, f"part-{idx:08d}"), "wb") as f:
-            for pdf in batches:
-                for b in pdf["blob"]:
-                    f.write(bytes(b))
-                    n += 1
-        yield pd.DataFrame({"n": [n]})
-
-    try:
-        total = (
-            blobs.mapInPandas(dump, "n long").agg(F.sum("n")).collect()[0][0] or 0
-        )
-        with open(path, "wb") as outf:
-            if header:
-                outf.write(header)
-            for name in sorted(os.listdir(tmpdir)):
-                with open(os.path.join(tmpdir, name), "rb") as pf:
-                    shutil.copyfileobj(pf, outf)
-    finally:
-        shutil.rmtree(tmpdir, ignore_errors=True)
-    return int(total)

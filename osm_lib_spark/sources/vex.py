@@ -24,35 +24,38 @@ per-way). Records:
     tags     = uint32 count, count × (string key, string value)
     string   = uint32 byteLen, UTF-8 bytes
 
-Blocks are fully self-contained, so the Spark dataflow mirrors the PBF
-codec: a header-only offset scan indexes blocks, ``mapInArrow`` tasks
-seek + inflate + decode their own blocks in parallel, and the sink
-encodes independent blocks in executors, each partition writing a
-part file in ONE parallel job; the driver concatenates parts in
-partition order (multipart-compose; O(1) driver memory). The payload is a sequential
-varint/string stream (strings interleave the varints, so PBF's purely
-columnar decode doesn't apply directly); the decode is a two-pass
-hybrid: a lean structural walk records varint spans — whole ref runs
-jump in O(1) via the block-wide terminator index — then ids/lats/lons/
-refs decode in single vectorized numpy passes and columns build as
-Arrow arrays from flats + offsets (``decode_vex_block_arrow``).
-Encode is vectorized the same way in reverse (``_chain_frags``: one
-numpy varint pass per column, per-entity fragments by slicing, block
-splits via cumsum+searchsorted, block-start entities re-encoded against
-reset state — bytes identical to the scalar writer, differential-
-tested). Measured at sf0.1 (2.9M entities, 363 blocks, local[32]):
+Blocks are fully self-contained, so VEX runs on the same Spark block
+scaffold as PBF (sources/pbf.py):
+
+* READ (``read_vex`` → ``read_blocks``): a header-only offset scan
+  (``scan_vex_blocks``) indexes blocks; ``mapInArrow`` tasks seek, read
+  and inflate their own blocks (an inflated block past the 1 MiB cap
+  raises) and decode them with ``decode_vex_block_arrow``. The payload
+  is a sequential varint/string stream (strings interleave the varints,
+  so PBF's purely columnar decode doesn't apply directly); the decode
+  is a two-pass hybrid: a lean structural walk records varint spans —
+  whole ref runs jump in O(1) via the block-wide terminator index —
+  then ids/lats/lons/refs decode in single vectorized numpy passes and
+  columns build as Arrow arrays from flats + offsets.
+* WRITE (``write_vex`` → ``write_blocks``): every id-sorted Arrow batch
+  of a range partition becomes one or more blocks through
+  ``encode_vex_rows``; block splits stay per batch. Each partition
+  writes a part file in ONE parallel job and the driver concatenates
+  parts in partition order (multipart-compose; O(1) driver memory).
+  Encode is vectorized like the decode in reverse (``_chain_frags``:
+  one numpy varint pass per column, per-entity fragments by slicing,
+  block-start entities re-encoded against reset state — bytes
+  identical to the scalar writer, differential-tested).
+
+Measured at sf0.1 (2.9M entities, 363 blocks, local[32]):
 encode ~0.76M entities/s (tag strings are the scalar remainder),
 decode ~2.2M entities/s (both were ~0.3-0.7M/s scalar).
 """
 
 from __future__ import annotations
 
-import os
 import struct
-import tempfile
 import zlib
-from typing import Iterator
-
 from bisect import bisect_left
 
 import numpy as np
@@ -61,14 +64,14 @@ import pandas as pd
 import pyarrow as pa
 
 from osm_lib_spark.sources.pbf import (
-    ENTITY_SCHEMA,
-    _as_list,
     _entity_batch,
     _tags_list_array,
     np_decode_varints,
     np_encode_varints_with_lens,
     np_unzigzag,
     np_zigzag,
+    read_blocks,
+    write_blocks,
 )
 
 VEX_BUFFER_SIZE = 1 << 20  # VEXBlock.java:25 — inflated blocks ≤ 1 MiB
@@ -81,6 +84,14 @@ _MEMBER_ORD = {t: i for i, t in enumerate(_MEMBER_TYPES)}
 # ---------------------------------------------------------------------------
 # varint stream primitives (scalar — VEX records interleave strings)
 # ---------------------------------------------------------------------------
+
+
+def _as_list(x) -> list:
+    """Arrow hands array columns to pandas as numpy arrays (or None);
+    normalize to a plain list."""
+    if x is None or (isinstance(x, float) and np.isnan(x)):
+        return []
+    return list(x)
 
 
 class _Reader:
@@ -630,77 +641,35 @@ def _encode_vex_rows_scalar(kind: str, frame: pd.DataFrame, max_bytes: int = 900
 
 
 # ---------------------------------------------------------------------------
-# Spark integration (same dataflow as sources/pbf.py)
+# Spark integration (the block scaffold of sources/pbf.py)
 # ---------------------------------------------------------------------------
 
 
-def read_vex(spark, path: str, blobs_per_task: int = 16):
-    """Distributed VEX read → unified entity DataFrame (blocks are the
-    parallelism unit; tasks seek + inflate + decode their own blocks)."""
-    rows = scan_vex_blocks(path)
-    # Task count: ≥1 task per blobs_per_task blocks, capped near cluster
-    # parallelism for small files — per-task Python-worker round trips
-    # dominated the wall at 91 tiny tasks (0.8s no-op floor on local[32]).
-    dp = spark.sparkContext.defaultParallelism
-    n_part = max(1, min(len(rows), max(dp, len(rows) // blobs_per_task)))
-    idx = spark.createDataFrame(
-        rows,
+def _decode_vex_block(row: dict, raw: bytes) -> list:
+    payload = zlib.decompress(raw)
+    if len(payload) > VEX_BUFFER_SIZE:
+        raise ValueError("VEX block inflates past the 1 MiB cap")
+    return [decode_vex_block_arrow(row["kind"], row["n_entities"], payload)]
+
+
+def read_vex(spark, path: str):
+    """Distributed VEX read → unified entity DataFrame (``read_blocks``
+    over the header-only block index)."""
+    return read_blocks(
+        spark,
+        scan_vex_blocks(path),
         "path string, offset long, size long, kind string, n_entities long, seq long",
-    ).repartition(n_part, "seq")
-
-    def decode(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        # Arrow end-to-end: each block decodes straight into Arrow arrays
-        # (flats + offsets) — no pandas object columns anywhere on the path
-        for batch in batches:
-            for r in batch.to_pylist():
-                with open(r["path"], "rb") as f:
-                    f.seek(int(r["offset"]))
-                    payload = zlib.decompress(f.read(int(r["size"])))
-                if len(payload) > VEX_BUFFER_SIZE:
-                    raise ValueError("VEX block inflates past the 1 MiB cap")
-                yield decode_vex_block_arrow(r["kind"], int(r["n_entities"]), payload)
-
-    return idx.mapInArrow(decode, schema=ENTITY_SCHEMA)
+        _decode_vex_block,
+    )
 
 
-def write_vex(path: str, nodes, ways, relations):
-    """Distributed VEX sink: executors encode independent blocks
-    (delta state resets per block — VexOutput.beginBlock), the driver
-    concatenates framed bytes type-major in (type, first_id) order."""
-    from pyspark.sql import functions as F  # noqa: N812
+def _encode_vex_batch(kind: str, batch: pa.RecordBatch):
+    # rows arrive id-sorted (sortWithinPartitions); blocks split per batch
+    return encode_vex_rows(kind, batch.to_pandas())
 
-    blob_schema = "type_rank int, first_id long, blob binary"
 
-    def encoder(kind: str):
-        rank = {"node": 0, "way": 1, "relation": 2}[kind]
-
-        def enc(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            for pdf in batches:
-                if len(pdf) == 0:
-                    continue
-                pdf = pdf.sort_values("id").reset_index(drop=True)
-                for first_id, blob in encode_vex_rows(kind, pdf):
-                    yield pd.DataFrame(
-                        {"type_rank": [rank], "first_id": [first_id], "blob": [blob]}
-                    )
-
-        return enc
-
-    parts = []
-    for kind, df in (("node", nodes), ("way", ways), ("relation", relations)):
-        if df is None:
-            continue
-        n_part = max(1, min(df.sparkSession.sparkContext.defaultParallelism, 64))
-        arranged = df.repartitionByRange(n_part, F.col("id")).sortWithinPartitions("id")
-        parts.append(arranged.mapInPandas(encoder(kind), schema=blob_schema))
-    if not parts:
-        raise ValueError("write_vex: nodes, ways and relations are all None — nothing to write")
-    blobs = parts[0]
-    for p in parts[1:]:
-        blobs = blobs.unionByName(p)
-    # kind-major union over range-partitioned, partition-sorted frames is
-    # already (type, first_id)-ordered partition-by-partition — one
-    # parallel part-file job + driver compose (see compose_blob_frame).
-    from osm_lib_spark.sources.pbf import compose_blob_frame
-
-    return compose_blob_frame(blobs, path)
+def write_vex(path: str, nodes, ways, relations) -> int:
+    """Distributed VEX sink (``write_blocks``; delta state resets per
+    block — VexOutput.beginBlock — so blocks encode independently).
+    Returns the number of blocks written."""
+    return write_blocks(path, nodes, ways, relations, _encode_vex_batch)

@@ -160,25 +160,26 @@ def test_bangor_roundtrip_exact(spark, tmp_path, bangor_entities):
     back.unpersist()
 
 
-def test_synthetic_roundtrip_from_span_entities(spark, docs_xs, tmp_path):
-    """Entities parsed from the synthetic span fixture survive a PBF
-    write→read cycle bit-for-bit (links the span codec and the byte
-    codec end to end)."""
-    from pyspark.sql import functions as F
-
+@pytest.mark.parametrize("fmt", ["pbf", "vex"])
+def test_synthetic_roundtrip_from_span_entities(spark, docs_xs, tmp_path, fmt):
+    """Entities parsed from the synthetic span fixture survive a PBF or
+    VEX write→read cycle through the Spark sink and source bit-for-bit
+    (links the span codec and the byte codecs end to end)."""
     from osm_lib_spark.sources.span_codec import (
         parse_nodes,
         parse_relations,
         parse_ways,
     )
+    from osm_lib_spark.sources.vex import read_vex, write_vex
 
+    write, read = {"pbf": (write_pbf, read_pbf), "vex": (write_vex, read_vex)}[fmt]
     nodes = parse_nodes(docs_xs)
     ways = parse_ways(docs_xs)
     # PBF member type vocabulary is NODE/WAY/RELATION (already ours)
     rels = parse_relations(docs_xs)
-    out = str(tmp_path / "syn.pbf")
-    write_pbf(out, nodes, ways, rels)
-    back = read_pbf(spark, out).cache()
+    out = str(tmp_path / f"syn.{fmt}")
+    write(out, nodes, ways, rels)
+    back = read(spark, out).cache()
 
     assert pbf_nodes(back).count() == nodes.count()
     assert pbf_ways(back).count() == ways.count()
@@ -214,6 +215,82 @@ def test_write_pbf_rejects_unknown_member_type(spark, tmp_path):
     )
     with pytest.raises(Exception, match="unknown relation member type 'AREA'"):
         write_pbf(str(tmp_path / "bad.pbf"), None, None, rels)
+
+
+def test_decoder_rejects_misaligned_entity_arrays():
+    """Per-entity arrays that must pair up are checked, not trusted:
+    tags built from the key counts alone (or members from the memid
+    counts alone) would shift every later entity's data silently."""
+    from osm_lib_spark.sources.pbf import (
+        _enc_field_bytes,
+        _enc_field_varint,
+        _enc_packed,
+        decode_block_arrow,
+    )
+
+    st = _enc_field_bytes(
+        1, b"".join(_enc_field_bytes(1, s) for s in [b"", b"a", b"b", b"c"])
+    )
+
+    def block(group: bytes) -> bytes:
+        return st + _enc_field_bytes(2, group)
+
+    def msg(fno: int, eid: int, **packed) -> bytes:
+        fields = {"keys": 2, "vals": 3, "roles": 8, "refs": 8, "memids": 9, "types": 10}
+        body = _enc_field_varint(1, eid) + b"".join(
+            _enc_packed(fields[k], np.array(v, np.uint64)) for k, v in packed.items()
+        )
+        return _enc_field_bytes(fno, body)
+
+    # a well-formed way block in which no way has refs decodes; the
+    # malformed variants below raise
+    (ok,) = decode_block_arrow(
+        block(msg(3, 1, keys=[1, 2], vals=[3, 3]) + msg(3, 2, keys=[1], vals=[2]))
+    )
+    assert ok.to_pylist()[1]["tags"] == [{"key": "a", "value": "b"}]
+    # each malformed block below has matching TOTALS, so only a
+    # per-entity check catches it: a way with 2 keys / 1 value next to
+    # one with 1 key / 2 values, and the same for relations
+    with pytest.raises(ValueError, match="way 1: keys and vals counts differ"):
+        decode_block_arrow(
+            block(
+                msg(3, 1, keys=[1, 2], vals=[3], refs=[2])
+                + msg(3, 2, keys=[1], vals=[2, 3], refs=[2])
+            )
+        )
+    mem = dict(memids=[2], types=[0], roles=[1])
+    with pytest.raises(ValueError, match="relation 7: keys and vals counts differ"):
+        decode_block_arrow(
+            block(
+                msg(4, 7, keys=[1, 2], vals=[3], **mem)
+                + msg(4, 8, keys=[1], vals=[2, 3], **mem)
+            )
+        )
+    # memids [2 2] / types [0] / roles [1 1], then [2] / [0 1] / [1]
+    with pytest.raises(ValueError, match="relation 5: memids, types and roles"):
+        decode_block_arrow(
+            block(
+                msg(4, 5, memids=[2, 2], types=[0], roles=[1, 1])
+                + msg(4, 6, memids=[2], types=[0, 1], roles=[1])
+            )
+        )
+    # memids [2 2] / types [0 1] / roles [1], then [2] / [0] / [1 1]
+    with pytest.raises(ValueError, match="relation 5: memids, types and roles"):
+        decode_block_arrow(
+            block(
+                msg(4, 5, memids=[2, 2], types=[0, 1], roles=[1])
+                + msg(4, 6, memids=[2], types=[0], roles=[1, 1])
+            )
+        )
+    # dense nodes: keys_vals runs [a b c] 0 and [a] 0 — both odd
+    dense = (
+        _enc_packed(1, np_zigzag(np.array([1, 1])))
+        + _enc_packed(8, np_zigzag(np.array([0, 0])))
+        + _enc_packed(9, np_zigzag(np.array([0, 0])))
+        + _enc_packed(10, np.array([1, 2, 3, 0, 1, 0], np.uint64))
+    )
+    with pytest.raises(ValueError, match="odd keys_vals run"):
+        decode_block_arrow(block(_enc_field_bytes(2, dense)))
 
 
 def test_non_dense_nodes_and_granularity():

@@ -108,26 +108,31 @@ _pbf_id = st.integers(min_value=0, max_value=(1 << 62) - 1)
 )
 def test_pbf_node_block_roundtrip_property(nodes):
     """Arbitrary unicode tags (incl. empty values), extreme ids and
-    coordinates survive encode → decode bit-for-bit, on BOTH decode
-    paths (scalar dicts and vectorized Arrow)."""
-    import pandas as pd
+    coordinates survive the production node encoder → decode
+    bit-for-bit, on BOTH decode paths (scalar dicts and vectorized
+    Arrow)."""
+    import pyarrow as pa
 
     from osm_lib_spark.sources.pbf import (
-        _encode_block,
+        _PA_TAGS,
+        _encode_dense_block_arrow,
         decode_block_arrow,
         decode_primitive_block,
     )
 
     nodes = sorted(nodes, key=lambda t: t[0])
-    frame = pd.DataFrame(
+    batch = pa.RecordBatch.from_pydict(
         {
             "id": [n[0] for n in nodes],
             "fixed_lat": [n[1] for n in nodes],
             "fixed_lon": [n[2] for n in nodes],
             "tags": [[{"key": k, "value": v} for k, v in n[3]] for n in nodes],
-        }
+        },
+        schema=pa.schema(
+            [("id", pa.int64()), ("fixed_lat", pa.int32()), ("fixed_lon", pa.int32()), ("tags", _PA_TAGS)]
+        ),
     )
-    block = _encode_block("node", frame)
+    block = _encode_dense_block_arrow(batch)
     dec = decode_primitive_block(block)
     assert list(dec["node_id"][0]) == [n[0] for n in nodes]
     assert list(dec["node_lat"][0]) == [n[1] for n in nodes]

@@ -449,12 +449,19 @@ def test_components_from_pairs_chain(spark):
     """Transitive chains must collapse to one component with the min
     doc_id as canonical survivor: 1-2, 2-3 => {1,2,3}; 5-6 => {5,6};
     4 alone => singleton. A long chain (10..15 linked pairwise)
-    exercises multiple propagation rounds."""
+    exercises multiple propagation rounds, and a 60-document chain
+    (100..159) needs 59 — the loop must run to its fixpoint, not stop
+    at a round cap."""
     from osm_lib_spark.operators.dedup import components_from_pairs
 
-    docs = spark.createDataFrame([(i,) for i in [1, 2, 3, 4, 5, 6] + list(range(10, 16))], "doc_id long")
+    chain = list(range(100, 160))
+    docs = spark.createDataFrame(
+        [(i,) for i in [1, 2, 3, 4, 5, 6] + list(range(10, 16)) + chain], "doc_id long"
+    )
     pairs = spark.createDataFrame(
-        [(1, 2), (2, 3), (5, 6)] + [(i, i + 1) for i in range(10, 15)],
+        [(1, 2), (2, 3), (5, 6)]
+        + [(i, i + 1) for i in range(10, 15)]
+        + [(i, i + 1) for i in chain[:-1]],
         "doc_a long, doc_b long",
     )
     got = {
@@ -466,6 +473,7 @@ def test_components_from_pairs_chain(spark):
         4: (4, 1),
         5: (5, 1), 6: (5, 0),
         **{i: (10, 1 if i == 10 else 0) for i in range(10, 16)},
+        **{i: (100, 1 if i == 100 else 0) for i in chain},
     }
 
 
